@@ -37,17 +37,19 @@ def _any_null(df: DataFrame):
 def null_audit(df: DataFrame, sample_size: int = 20) -> NullAudit:
     """One aggregation pass: total rows, rows with any null, per-column
     null counts; plus a bounded driver-side sample of bad rows (the
-    notification payload — replaces per-row SNS at ref delta_load.py:77-84)."""
+    notification payload — replaces per-row SNS at ref delta_load.py:77-84),
+    collected only when the aggregate found a bad row."""
     aggs = [
         F.count(F.lit(1)).alias("__n_rows"),
         F.sum(_any_null(df).cast("long")).alias("__n_bad"),
         *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns],
     ]
     row = df.agg(*aggs).first()
-    sample = df.filter(_any_null(df)).limit(sample_size).collect()
+    n_bad = row["__n_bad"] or 0
+    sample = df.filter(_any_null(df)).limit(sample_size).collect() if n_bad else []
     return NullAudit(
         n_rows=row["__n_rows"],
-        n_bad_rows=row["__n_bad"] or 0,
+        n_bad_rows=n_bad,
         null_counts={c: row[c] or 0 for c in df.columns},
         sample_bad_rows=sample,
     )

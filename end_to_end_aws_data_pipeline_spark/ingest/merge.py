@@ -8,8 +8,7 @@ Two forms:
   the key columns. This is what Delta's MERGE INTO compiles to for
   insert-or-replace, without needing lake-format jars.
 - ``merge_into_parquet``: applies ``upsert`` against a parquet table on
-  disk (read-modify-write). At lake scale you would partition the
-  target and rewrite only affected partitions — noted inline.
+  disk (read-modify-write, or partition-scoped).
 
 The reference never declares a primary key (SURVEY.md §1.2), so its
 "upsert" silently degrades to append. We make the key explicit and
@@ -19,18 +18,24 @@ required — the honest version of the same contract.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F  # noqa: F401 (used across merge paths)
+from pyspark.errors import SparkRuntimeException
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
+from pyspark.sql import functions as F
+
+_DUPLICATE_KEY = "upsert: updates hold more than one row for a key"
 
 
 def upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
     """Insert-or-replace by key: updates win over base on key collision.
 
-    updates must be unique per key (enforced upstream); base may hold at
-    most one row per key (a table invariant this function preserves).
+    base may hold at most one row per key (a table invariant this
+    function preserves); so must updates, checked as the plan runs: a
+    key with two update rows fails the action that executes it.
     Implementation: tag + union + one window over the key taking the
-    highest-precedence row — a single hash shuffle, no join needed.
+    highest-precedence row and counting its update rows — a single hash
+    shuffle, no join, no extra action.
 
     Schema drift between deliveries (a realistic CSV-pipeline input) is
     rejected loudly: an increment with missing columns would otherwise
@@ -48,11 +53,13 @@ def upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
     tagged_base = base.select(*updates.columns).withColumn("__prec", F.lit(0))
     tagged_upd = updates.withColumn("__prec", F.lit(1))
     w = W.partitionBy(*keys).orderBy(F.col("__prec").desc())
+    n_updates = F.sum("__prec").over(w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
     return (
         tagged_base.unionByName(tagged_upd)
         .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__prec", "__rn")
+        .withColumn("__n_upd", n_updates)
+        .filter((F.col("__rn") == 1) & F.assert_true(F.col("__n_upd") <= 1, _DUPLICATE_KEY).isNull())
+        .drop("__prec", "__rn", "__n_upd")
     )
 
 
@@ -67,23 +74,24 @@ def merge_into_parquet(
     creates it if absent. Returns the resulting row count.
 
     With ``partition_by`` set (which must be one of ``keys``' hash
-    inputs — every key lives in exactly one partition), the merge is
-    partition-scoped: only partitions present in ``updates`` are read
-    and rewritten via dynamic partition overwrite, so IO is
-    proportional to the delta, not the table — the shape that holds at
-    100 TB. Without it: whole-table read-modify-write (fine for small
-    state tables like the watermarks).
+    inputs — every key lives in exactly one partition), the merge into
+    an existing table is partition-scoped: only partitions present in
+    ``updates`` are read and rewritten via dynamic partition overwrite,
+    so IO is proportional to the delta, not the table — the shape that
+    holds at 100 TB. Without it: whole-table read-modify-write, whose
+    count is observed in the write's result stage (a retried task counts
+    its partition once), so no job reads the table back. A key with two
+    rows in ``updates`` raises ``ValueError``; the table is unchanged.
     """
-    if partition_by is not None and os.path.exists(target_dir):
+    exists = os.path.exists(target_dir)
+    if partition_by is not None and exists:
         return _merge_partition_scoped(spark, target_dir, updates, keys, partition_by)
-    if os.path.exists(target_dir):
-        base = spark.read.parquet(target_dir)
-        merged = upsert(base, updates, keys)
-    else:
-        merged = updates
-        if partition_by is not None:
-            merged.write.mode("overwrite").partitionBy(partition_by).parquet(target_dir)
-            return spark.read.parquet(target_dir).count()
+    base = spark.read.parquet(target_dir) if exists else spark.createDataFrame([], updates.schema)
+    obs = Observation()
+    merged = upsert(base, updates, keys).observe(obs, F.count(F.lit(1)).alias("n"))
+    writer = merged.write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
     # write-to-temp, rename old aside, promote, then delete old: never
     # overwrite the directory still being scanned by the merge plan, and
     # a valid table directory exists at target_dir at every instant —
@@ -91,19 +99,29 @@ def merge_into_parquet(
     # clean up, never a missing table
     tmp_dir = target_dir.rstrip("/") + ".__merge_tmp"
     old_dir = target_dir.rstrip("/") + ".__merge_old"
-    merged.write.mode("overwrite").parquet(tmp_dir)
-    n = spark.read.parquet(tmp_dir).count()
-    import shutil
-
+    try:
+        _save(writer, tmp_dir, keys)
+    except Exception:  # a failed write leaves an empty staging dir
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        raise
     if os.path.exists(old_dir):  # leftover from an interrupted merge
         shutil.rmtree(old_dir)
-    had_target = os.path.exists(target_dir)
-    if had_target:
+    if exists:
         os.replace(target_dir, old_dir)
     os.replace(tmp_dir, target_dir)
-    if had_target:
+    if exists:
         shutil.rmtree(old_dir)
-    return n
+    return obs.get["n"]
+
+
+def _save(writer, path: str, keys: list[str]) -> None:
+    """``writer.parquet(path)``; a failed duplicate-key check raises ValueError."""
+    try:
+        writer.parquet(path)
+    except SparkRuntimeException as e:
+        if _DUPLICATE_KEY in str(e):
+            raise ValueError(f"{_DUPLICATE_KEY} {keys}; the table is unchanged") from None
+        raise
 
 
 def _merge_partition_scoped(
@@ -134,10 +152,11 @@ def _merge_partition_scoped(
     base = spark.read.parquet(target_dir)
     base_affected = base.filter(F.col(partition_by).isin(affected))
     merged = upsert(base_affected, updates, keys)
-    (
+    writer = (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_by)
-        .parquet(target_dir)
     )
+    _save(writer, target_dir, keys)
+    # the table's total: the partitions not rewritten are never read
     return spark.read.parquet(target_dir).count()

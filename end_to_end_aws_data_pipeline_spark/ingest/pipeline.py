@@ -54,9 +54,11 @@ def parse_increment_path(path: str) -> tuple[str, int]:
 
 
 class IngestPipeline:
-    """One warehouse = a directory of parquet tables + a watermark state
-    table. ``ingest_file`` is EP1 (gated); ``backfill`` is EP2 (gate
-    bypassed, as the reference's direct-invoke path does)."""
+    """One warehouse = a directory of parquet tables + the watermark file
+    ``_ingest_watermarks.json`` (``{table_name: folder_ts}``, plain file
+    I/O, no Spark job). ``ingest_file`` is EP1 (gated);
+    ``backfill`` is EP2 (gate bypassed, as the reference's direct-invoke
+    path does)."""
 
     def __init__(
         self,
@@ -80,7 +82,7 @@ class IngestPipeline:
         # optional per-table partition column → partition-scoped merges
         # (IO proportional to each delivery, not the table)
         self.partition_by_table = partition_by_table or {}
-        self.watermarks = WatermarkStore(spark, os.path.join(warehouse_dir, "_ingest_watermarks"))
+        self.watermarks = WatermarkStore(os.path.join(warehouse_dir, "_ingest_watermarks.json"))
 
     def table_dir(self, table_name: str) -> str:
         return os.path.join(self.warehouse_dir, table_name)

@@ -1,7 +1,6 @@
 """Incremental-load watermarks: the reference's DynamoDB nested-map
 state (ref: second_lambda_function.py:42-88 read/gate,
-delta_load.py:204-265 advance) as a small parquet state table +
-relational gate.
+delta_load.py:204-265 advance) as one small local JSON file.
 
 Semantics preserved exactly:
 - per table, only a *strictly newer* version timestamp is processed
@@ -11,47 +10,49 @@ Semantics preserved exactly:
   keyed upsert downstream makes the replay idempotent (exactly-once
   effect end-to-end).
 
-The state table is tiny (one row per table name) — reading it is a
-broadcast; the gate on arriving work is a broadcast left join + filter.
+The state, ``{table_name: folder_ts}``, is read and written with plain
+file I/O, no Spark job; a write goes to an fsynced temp file renamed
+over the state file, so a crash leaves the old map or the new one. The
+relational gate on arriving work is a broadcast left join + filter.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-SCHEMA = "table_name string, folder_ts long"
 
 
 class WatermarkStore:
-    """Parquet-backed watermark state (`_ingest_watermarks`)."""
+    """File-backed watermark state (``<warehouse>/_ingest_watermarks.json``)."""
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
-        self.state_dir = state_dir
+    def __init__(self, path: str):
+        self.path = path
 
-    def read(self) -> DataFrame:
-        if os.path.exists(self.state_dir):
-            return self.spark.read.parquet(self.state_dir)
-        return self.spark.createDataFrame([], schema=SCHEMA)
+    def _load(self) -> dict[str, int]:
+        if not os.path.exists(self.path):
+            return {}
+        with open(self.path, encoding="utf-8") as f:
+            return json.load(f)
 
     def get(self, table_name: str) -> int | None:
-        row = (
-            self.read().filter(F.col("table_name") == table_name).select("folder_ts").first()
-        )
-        return row.folder_ts if row else None
+        return self._load().get(table_name)
 
     def advance(self, table_name: str, folder_ts: int) -> None:
-        """Monotonic upsert of one table's watermark (never moves backward)."""
+        """Monotonic update of one table's watermark (never moves backward)."""
         current = self.get(table_name)
         if current is not None and current >= folder_ts:
             return
-        from end_to_end_aws_data_pipeline_spark.ingest.merge import merge_into_parquet
-
-        upd = self.spark.createDataFrame([(table_name, folder_ts)], schema=SCHEMA)
-        merge_into_parquet(self.spark, self.state_dir, upd, keys=["table_name"])
+        state = self._load()
+        state[table_name] = folder_ts
+        tmp = self.path + ".tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(state, f, sort_keys=True)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self.path)
 
 
 def gate_strictly_newer(

@@ -4,6 +4,8 @@ strictly-newer gate, versioned re-delivery, header-only files."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import types as T
 
@@ -355,3 +357,147 @@ def test_read_evolving_parquet_merges_schemas(spark, tmp_path):
     assert rows[2] == ("b", 9.5, 2)
     # pruning still works through the merged schema
     assert read_evolving_parquet(spark, root).filter(F.col("gen") == 2).count() == 1
+
+
+# ---------------------------------------------------------------------------
+# bookkeeping costs no Spark job: file-backed watermark, observed counts
+# ---------------------------------------------------------------------------
+
+
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _two_deliveries(tmp_path):
+    _write(tmp_path, "20250108_075503", "T.csv", "K,V\n1,a\n2,\n3,c\n3,c\n")
+    _write(tmp_path, "20250108_075504", "T.csv", "K,V\n1,b\n4,d\n")
+    return str(tmp_path / "ingest")
+
+
+# measured on the two-delivery root above: per delivery, the first-row
+# read, two for the audit aggregate (AQE runs its shuffle-map stage as a
+# job of its own) and one per stage of the merge write (3 into a new
+# table, 4 into an existing one); plus the bad-row sample of the
+# delivery with a null
+FIRST_PASS_JOBS = 14
+
+
+def test_ingest_bookkeeping_launches_no_jobs(spark, tmp_path):
+    root = _two_deliveries(tmp_path)
+    wh = str(tmp_path / "wh")
+    pipe = IngestPipeline(spark, wh, keys_by_table={"T": ["K"]})
+    results, n_first = _jobs(spark, lambda: pipe.ingest_root(root))
+    assert [r.status for r in results] == ["loaded", "loaded"]
+    assert [r.n_rows_written for r in results] == [2, 3]
+    assert n_first <= FIRST_PASS_JOBS
+
+    assert _jobs(spark, lambda: pipe.watermarks.get("T")) == (20250108075504, 0)
+    assert _jobs(spark, lambda: pipe.watermarks.advance("T", 20250108075505))[1] == 0
+
+    replay = IngestPipeline(spark, wh, keys_by_table={"T": ["K"]})
+    results, n_replay = _jobs(spark, lambda: replay.ingest_root(root))
+    assert [r.status for r in results] == ["skipped_not_newer"] * 2
+    assert n_replay == 0
+
+
+def test_watermark_store_semantics(tmp_path):
+    from end_to_end_aws_data_pipeline_spark.ingest.watermark import WatermarkStore
+
+    path = str(tmp_path / "_ingest_watermarks.json")
+    store = WatermarkStore(path)
+    assert store.get("T") is None  # no state file yet
+    store.advance("T", 20250108075504)
+    store.advance("T", 20250108075503)  # older: no-op
+    store.advance("U", 20250101000000)
+    assert store.get("T") == 20250108075504
+    with open(path) as f:
+        before = f.read()
+
+    # an interrupted write leaves its temp file behind: ignored by get
+    with open(path + ".tmp", "w") as f:
+        f.write('{"T": 1, "trunc')
+    assert WatermarkStore(path).get("T") == 20250108075504
+    with open(path) as f:
+        assert f.read() == before
+    # and the next advance replaces it
+    store.advance("T", 20250108075505)
+    assert WatermarkStore(path).get("T") == 20250108075505
+    assert WatermarkStore(path).get("U") == 20250101000000
+
+
+def test_new_pipeline_sees_watermarks(spark, tmp_path):
+    p1 = _write(tmp_path, "20250108_075503", "T.csv", "K,V\n1,a\n")
+    wh = str(tmp_path / "wh")
+    IngestPipeline(spark, wh, keys_by_table={"T": ["K"]}).ingest_file(p1)
+    assert (tmp_path / "wh" / "_ingest_watermarks.json").is_file()
+    again = IngestPipeline(spark, wh, keys_by_table={"T": ["K"]})
+    assert again.watermarks.get("T") == 20250108075503
+    assert again.ingest_file(p1).status == "skipped_not_newer"
+
+
+def test_header_only_delivery_keeps_table_count(spark, tmp_path):
+    import threading
+
+    p1 = _write(tmp_path, "20250108_075503", "T.csv", "K,V\n1,a\n2,b\n")
+    p2 = _write(tmp_path, "20250108_075504", "T.csv", "K,V\n")
+    pipe = IngestPipeline(spark, str(tmp_path / "wh"), keys_by_table={"T": ["K"]})
+    assert pipe.ingest_file(p1).n_rows_written == 2
+
+    # the merge reads its count from an Observation: run it off the main
+    # thread so a count that never arrives fails the test, not hangs it
+    out = []
+    t = threading.Thread(target=lambda: out.append(pipe.ingest_file(p2)), daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert out, "ingest of a header-only delivery did not return"
+    assert (out[0].status, out[0].n_rows_written) == ("loaded", 2)
+    assert pipe.watermarks.get("T") == 20250108075504
+
+
+@pytest.mark.parametrize("existing", [False, True], ids=["first_write", "merge"])
+def test_duplicate_key_delivery_rejected(spark, tmp_path, existing):
+    """Two rows for one configured key in one delivery fail the load
+    (the merge plan counts each key's update rows) and change nothing."""
+    wh = tmp_path / "wh"
+
+    def tree():  # every file and directory under the warehouse, with mtimes
+        return {
+            os.path.relpath(os.path.join(d, n), wh): os.path.getmtime(os.path.join(d, n))
+            for d, dirs, files in os.walk(wh)
+            for n in dirs + files
+        }
+
+    pipe = IngestPipeline(spark, str(wh), keys_by_table={"T": ["K"]})
+    if existing:
+        pipe.ingest_file(_write(tmp_path, "20250108_075502", "T.csv", "K,V\n1,z\n"))
+    before, wm_before = tree(), pipe.watermarks.get("T")
+
+    dup = _write(tmp_path, "20250108_075503", "T.csv", "K,V\n1,a\n1,b\n2,c\n")
+    with pytest.raises(ValueError, match=r"more than one row for a key \['K'\]"):
+        pipe.ingest_file(dup)
+    assert tree() == before  # table files untouched, no staging debris
+    assert pipe.watermarks.get("T") == wm_before
+
+
+def test_duplicate_key_rejected_in_partition_scoped_merge(spark, tmp_path):
+    from end_to_end_aws_data_pipeline_spark.ingest.merge import merge_into_parquet
+
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame([(1, "a", "d1")], "k int, v string, dt string")
+    merge_into_parquet(spark, target, base, keys=["k"], partition_by="dt")
+    dup = spark.createDataFrame([(2, "a", "d1"), (2, "b", "d1")], "k int, v string, dt string")
+    with pytest.raises(ValueError, match="more than one row for a key"):
+        merge_into_parquet(spark, target, dup, keys=["k"], partition_by="dt")
+    assert sorted(spark.read.parquet(target).collect()) == [(1, "a", "d1")]
+    assert not [n for n in os.listdir(target) if n.startswith(".spark-staging")]
